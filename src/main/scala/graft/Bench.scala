@@ -793,7 +793,6 @@ object BenchConcurrentMixed {
         sess.conf.set("spark.sql.shuffle.partitions",
           math.max(4, 2 * cpus.toInt / math.max(1, readers)).toString)
         sess.sparkContext.setLocalProperty("spark.scheduler.pool", s"client$i")
-        graft.engine.mv.Mv.install(sess)
         (0 until rounds).foreach { j =>
           val (name, fn) = mix((i + j) % mix.size)
           val t0 = System.nanoTime()

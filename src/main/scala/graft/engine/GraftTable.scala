@@ -14,10 +14,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * All data movement is expressed as Spark jobs over DataFrames; all
   * metadata movement is atomic tablestatus commits. Nothing here ever
-  * collects table data to the driver.
+  * collects table data to the driver. Opening one installs graft's
+  * rules on its session ([[Graft.install]]).
   */
 class GraftTable private (val spark: SparkSession, val path: String)
     extends org.apache.spark.internal.Logging {
+  Graft.install(spark)
   val layout = new TableLayout(path, spark.sessionState.newHadoopConf())
 
   def meta: TableMeta = layout.readTableMeta()

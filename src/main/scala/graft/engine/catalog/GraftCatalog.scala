@@ -87,13 +87,24 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
 
   override def tableExists(ident: Identifier): Boolean = isTableDir(tablePath(ident))
 
-  override def loadTable(ident: Identifier): Table = {
+  /** The layout of an existing table. Loading a table is how a session
+    * that names tables in SQL first touches graft, so it installs the
+    * session's rules: it runs during analysis under the querying
+    * session, before that query is optimized or planned. */
+  private def existingLayout(ident: Identifier): TableLayout = {
     val p = resolvedPath(tablePath(ident))
     if (!fs.exists(new Path(p, "_meta/tablemeta.json")))
       throw new NoSuchTableException(ident)
-    val layout = new TableLayout(p.toString, conf)
-    val schema = DataType.fromJson(layout.readTableMeta().schemaJson).asInstanceOf[StructType]
-    new CarbonishTable(p.toString, schema)
+    graft.engine.Graft.install(SparkSession.active)
+    new TableLayout(p.toString, conf)
+  }
+
+  private def schemaOf(layout: TableLayout): StructType =
+    DataType.fromJson(layout.readTableMeta().schemaJson).asInstanceOf[StructType]
+
+  override def loadTable(ident: Identifier): Table = {
+    val layout = existingLayout(ident)
+    new CarbonishTable(layout.tablePath, schemaOf(layout))
   }
 
   /** `SELECT … FROM graft.ns.t VERSION AS OF <v>` — Spark's own time-
@@ -102,18 +113,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     * version `v`. Served under the current schema; horizon bounds per
     * statusAt. */
   override def loadTable(ident: Identifier, version: String): Table = {
-    val p = resolvedPath(tablePath(ident))
-    if (!fs.exists(new Path(p, "_meta/tablemeta.json")))
-      throw new NoSuchTableException(ident)
-    val layout = new TableLayout(p.toString, conf)
-    val schema = DataType.fromJson(layout.readTableMeta().schemaJson).asInstanceOf[StructType]
+    val layout = existingLayout(ident)
     val v =
       try version.toLong
       catch { case _: NumberFormatException =>
         throw new IllegalArgumentException(
           s"carbonish versions are commit-log numbers, got '$version'") }
     layout.statusAt(v) // fail at resolution time, not first scan
-    new CarbonishTable(p.toString, schema, asOfVersion = Some(v))
+    new CarbonishTable(layout.tablePath, schemaOf(layout), asOfVersion = Some(v))
   }
 
   /** `… TIMESTAMP AS OF <ts>` — Spark resolves the literal in the
@@ -121,13 +128,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     * the newest commit at or before it from the PERSISTED per-commit
     * `committedAt` stamps (r18; file mtimes only as the pre-stamp
     * fallback). */
-  override def loadTable(ident: Identifier, timestamp: Long): Table = {
-    val p = resolvedPath(tablePath(ident))
-    if (!fs.exists(new Path(p, "_meta/tablemeta.json")))
-      throw new NoSuchTableException(ident)
-    val layout = new TableLayout(p.toString, conf)
-    loadTable(ident, layout.versionAtTimestamp(timestamp / 1000L).toString)
-  }
+  override def loadTable(ident: Identifier, timestamp: Long): Table =
+    loadTable(ident,
+      existingLayout(ident).versionAtTimestamp(timestamp / 1000L).toString)
 
   override def createTable(
       ident: Identifier,

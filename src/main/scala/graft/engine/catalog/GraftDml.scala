@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions.expr
   * Spark's own parser produces an analyzed [[UpdateTable]] command, but
   * only executes it for `SupportsRowLevelOperations` sources; for
   * everything else the built-in strategy throws. This strategy (injected
-  * ahead of the built-ins via `spark.experimental.extraStrategies`, the
-  * same session-local registration the MV rewrite rule uses) intercepts
+  * ahead of the built-ins by [[graft.engine.Graft.install]]) intercepts
   * the analyzed plan and routes it to the engine's copy-on-write
   * [[graft.engine.Mutation]] path — only segments containing matching
   * rows are rewritten, so a point UPDATE on a 100 TB table touches ~1
@@ -30,15 +29,6 @@ import org.apache.spark.sql.functions.expr
   * and :259 (updateTable) — there a bespoke parser; here Spark's parser +
   * a planner hook, so aliases/subqueries/ANSI quirks are all inherited.
   */
-object GraftDml {
-  /** Idempotently enable SQL UPDATE for carbonish tables on a session. */
-  def enable(spark: SparkSession): Unit = synchronized {
-    val has = spark.experimental.extraStrategies.exists(_.isInstanceOf[GraftDmlStrategy])
-    if (!has) spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies :+ new GraftDmlStrategy
-  }
-}
-
 class GraftDmlStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case UpdateTable(rel, assignments, condition) =>

@@ -16,14 +16,8 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
   * rewritten to the SI-pinned read ([[Si.pinnedFor]]: row-group →
   * file → segment grain) with the ORIGINAL filter kept as the exact
   * residual, so users get index pruning without calling
-  * [[Si.readWhereIn]] themselves. Installed per-session by
-  * [[SiSql.enable]]; CREATE INDEX … AS 'carbondata' enables it
-  * automatically. */
-object SiSql {
-  def enable(spark: SparkSession): Unit =
-    graft.engine.ExtraRules.install(spark, classOf[SiRewriteRule])(new SiRewriteRule)
-}
-
+  * [[Si.readWhereIn]] themselves. Installed by
+  * [[graft.engine.Graft.install]]. */
 class SiRewriteRule extends Rule[LogicalPlan] {
 
   /** Past this many literals an index probe stops being a point lookup

@@ -17,25 +17,14 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
   * those segments, and replaces the marker with the exact
   * token-membership residual. The UDF bodies THROW, so a query whose
   * rewrite cannot fire (no carbonish relation under the filter) fails
-  * loudly instead of silently matching nothing.
+  * loudly instead of silently matching nothing. The functions and the
+  * rule are installed by [[graft.engine.Graft.install]].
   *
   * Query syntax mirrors the reference's lucene `field:terms` form:
   * `text_match('text:big data OR carbon')` = token index lookup on
   * column `text` for (big AND data) OR carbon.
   */
 object TextMatchSql {
-
-  private val err = "text_match() applies to carbonish table scans only " +
-    "(the index rewrite rule did not fire on this plan)"
-
-  /** Idempotently register the UDFs + rewrite rule on a session. */
-  def enable(spark: SparkSession): Unit = synchronized {
-    val f1: String => Boolean = _ => throw new UnsupportedOperationException(err)
-    val f2: (String, Int) => Boolean = (_, _) => throw new UnsupportedOperationException(err)
-    spark.udf.register("text_match", f1)
-    spark.udf.register("text_match_with_limit", f2)
-    graft.engine.ExtraRules.install(spark, classOf[TextMatchRule])(new TextMatchRule)
-  }
 
   private[graft] def parseArg(s: String): (String, String) = {
     val i = s.indexOf(':')
@@ -203,7 +192,7 @@ class TextMatchRule extends Rule[LogicalPlan] {
           case Some(ids) => t.readSegments(ids.toSeq.sorted)
           case None => t.read
         }
-        val pruned = MvRewriteRuleGuard.without {
+        val pruned = graft.engine.mv.MvRewriteRule.withoutRewrite {
           base.select(needed.map(org.apache.spark.sql.functions.col).toSeq: _*)
             .queryExecution.optimizedPlan
         }
@@ -220,14 +209,4 @@ class TextMatchRule extends Rule[LogicalPlan] {
     val newChild = f.child.transformUp { case r if r eq rel => newRel }
     Some(if (rest.isEmpty) newChild else Filter(rest.reduce(And(_, _)), newChild))
   }
-}
-
-/** Indirection so this file compiles without a hard dependency cycle on
-  * the mv package internals: MV create/refresh paths disable the MV
-  * rewrite while planning nested reads; the text rule's nested reads
-  * reuse the same guard (they never contain aggregates, but a
-  * rewrite-in-rewrite is pure waste). */
-private object MvRewriteRuleGuard {
-  def without[T](body: => T): T =
-    graft.engine.mv.MvRewriteRule.withoutRewrite(body)
 }

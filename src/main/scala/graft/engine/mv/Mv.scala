@@ -42,7 +42,7 @@ case class MvDef(
 
 /** In-memory session catalog. Persistence lives in [[MvStore]]: every
   * create/refresh ALSO writes `<mvPath>/_meta/mvdef.bin`, and
-  * [[Mv.load]] / [[Mv.install]] re-hydrate defs after a JVM restart
+  * [[Mv.load]] re-hydrates defs after a JVM restart
   * (the reference keeps MV schemas in its metastore for the same
   * reason, CarbonCreateMVCommand.scala:60). */
 object MvCatalog {
@@ -75,10 +75,6 @@ object MvCatalog {
 }
 
 object Mv {
-  /** Install the rewrite rule on a session (idempotent). */
-  def install(spark: SparkSession): Unit =
-    graft.engine.ExtraRules.install(spark, classOf[MvRewriteRule])(new MvRewriteRule)
-
   /** An MV plan that is not an Aggregate must be pure
     * select-project-join: Project/Filter/Join over leaves, everything
     * deterministic. Windows, unions, limits, generators etc. have no
@@ -124,7 +120,6 @@ object Mv {
     MvCatalog.register(d)
     snapshot.foreach(s => MvCatalog.setRefreshedSegments(name, s))
     persist(spark, d)
-    install(spark)
     d
   }
 
@@ -136,12 +131,14 @@ object Mv {
     catch { case scala.util.control.NonFatal(_) => () }
 
   /** Re-register an MV persisted at `mvPath` by a previous session.
-    * Returns None if no (readable) def is stored there. */
+    * Returns None if no (readable) def is stored there. The def is read
+    * through [[graft.engine.format.TableLayout]], not a [[GraftTable]],
+    * so the session's rules are installed here. */
   def load(spark: SparkSession, mvPath: String): Option[MvDef] =
     MvStore.load(spark, mvPath).map { case (d, refreshed) =>
       MvCatalog.register(d)
       refreshed.foreach(s => MvCatalog.setRefreshedSegments(d.name, s))
-      install(spark)
+      graft.engine.Graft.install(spark)
       d
     }
 

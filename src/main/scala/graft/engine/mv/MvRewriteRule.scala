@@ -20,10 +20,14 @@ object MvRewriteRule {
   private val disabled = new ThreadLocal[Boolean] {
     override def initialValue(): Boolean = false
   }
-  /** Run `body` with rewriting off (MV create/refresh must see base data). */
+  /** Run `body` with rewriting off (MV create/refresh must see base data).
+    * Nests: the SI and text rules call this from inside the optimizer,
+    * and must not turn rewriting back on for an enclosing create or
+    * refresh. */
   def withoutRewrite[T](body: => T): T = {
+    val was = disabled.get()
     disabled.set(true)
-    try body finally disabled.set(false)
+    try body finally disabled.set(was)
   }
   private[mv] def isDisabled: Boolean = disabled.get()
 }

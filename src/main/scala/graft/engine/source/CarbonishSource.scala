@@ -709,12 +709,15 @@ class CarbonishScanBuilder(
       }
     // SQL MIN/MAX ignore nulls, matching stats that track non-null bounds;
     // a column that is entirely null in some segment has min=None there
-    // and the fold bails (conservative)
+    // and the fold bails (conservative). A 0-row segment (an empty
+    // insert) has no value to contribute and is left out; an unknown
+    // row count (-1) is not
+    val nonEmpty = visible.filter(_.rowCount != 0)
     def bound(name: String, wantMin: Boolean): Option[Any] = {
       val dt = schema.fields.find(_.name == name).map(_.dataType).getOrElse(return None)
-      val perSeg = visible.map(_.stats.get(name).flatMap(cs =>
+      val perSeg = nonEmpty.map(_.stats.get(name).flatMap(cs =>
         if (wantMin) cs.min else cs.max))
-      if (perSeg.exists(_.isEmpty)) return None
+      if (perSeg.isEmpty || perSeg.exists(_.isEmpty)) return None
       val folded = perSeg.flatten.reduceLeft[String] { (a, b) =>
         StatValue.compareStored(dt, a, b) match {
           case Some(c) => if ((c <= 0) == wantMin) a else b

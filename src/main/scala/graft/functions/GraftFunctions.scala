@@ -315,7 +315,7 @@ object GraftFunctions {
     * the Column builders directly). Named `text_match_contains` — the
     * row-level substring variant — so it can't collide with the indexed
     * `text_match('col:query')` marker registered by
-    * [[graft.engine.index.TextMatchSql.enable]]. */
+    * [[graft.engine.Graft.install]]. */
   def register(spark: SparkSession): Unit = {
     spark.udf.register("text_match_contains", (text: String, query: String) => {
       if (text == null) false

@@ -212,9 +212,7 @@ object EngineQueries {
     // DataFrame filter — no readWhereIn — rewritten by SiRewriteRule to
     // the same pinned read; SiSqlRewriteSpec asserts the pruning
     "q_si_sql_lookup" -> ((s, d) => {
-      val tbl = ordersSi(s, d)
-      graft.engine.index.SiSql.enable(s)
-      tbl.read.filter(col("o_custkey").isin(7L, 21L, 404L))
+      ordersSi(s, d).read.filter(col("o_custkey").isin(7L, 21L, 404L))
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"))
     }),
@@ -287,7 +285,6 @@ object EngineQueries {
     // (reference TextMatchUDF.scala:23-30). The UDF body THROWS, so
     // this row FAILS outright if the rewrite doesn't fire.
     "q_sql_text_match" -> ((s, d) => {
-      graft.engine.index.TextMatchSql.enable(s)
       docs3(s, d).read.createOrReplaceTempView("docs3_sql")
       s.sql("""SELECT lang, count(*) AS cnt FROM docs3_sql
                WHERE text_match('text:row data OR und') GROUP BY lang""")
@@ -304,46 +301,58 @@ object EngineQueries {
     // FAILS (exception) if the rewrite doesn't fire, so CORRECTNESS
     // guards the rewrite rule, not just the answer
     "q_mv_rollup" -> ((s, d) =>
-      mvServed(s, d, t(s, d, "lineitem").groupBy("l_returnflag")
+      mvServed(s, d, "mv_li_roll", t(s, d, "lineitem").groupBy("l_returnflag")
         .agg(sum(dec(col("l_quantity"))).cast("double").as("sum_qty"),
-          count(lit(1)).as("cnt")))),
+          count(lit(1)).as("cnt")))(liRoll(s, d))),
     // MV filter subsumption: a residual filter on an MV grouping column
     // is applied over the MV scan before re-aggregation (reference
     // MVMatcher SelectSelectNoChildDelta); fails if the rewrite doesn't
     // fire
     "q_mv_filter" -> ((s, d) =>
-      mvServed(s, d, t(s, d, "lineitem")
+      mvServed(s, d, "mv_li_roll", t(s, d, "lineitem")
         .filter(col("l_linestatus") === "O")
         .groupBy("l_returnflag")
         .agg(sum(dec(col("l_quantity"))).cast("double").as("sum_qty"),
-          count(lit(1)).as("cnt")))),
+          count(lit(1)).as("cnt")))(liRoll(s, d))),
     // timeseries MV hierarchy (reference mv-guide.md "Time Series
     // Support"): a DAY-granularity query served from an HOUR-grain MV —
     // the bucket re-truncates, the aggregates roll up; fails if the
     // rewrite doesn't fire
     "q_mv_timeseries" -> ((s, d) =>
-      mvServedTs(s, d, t(s, d, "events")
+      mvServed(s, d, "mv_ev_ts", t(s, d, "events")
         .groupBy(graft.functions.GraftFunctions.timeseries(col("ts"), "day").as("bucket"))
-        .agg(dsum(col("value")).as("sum_value"), count(lit(1)).as("cnt")))),
+        .agg(dsum(col("value")).as("sum_value"), count(lit(1)).as("cnt")))(
+        // HOUR-grain MV: the DAY query re-truncates its buckets
+        t(s, d, "events")
+          .groupBy(graft.functions.GraftFunctions.timeseries(col("ts"), "hour").as("b"))
+          .agg(sum(dec(col("value"))).as("pv"), count(lit(1)).as("pc")))),
     // join MV (reference MVMatcher join subsumption): a coarser rollup
     // over the orders⋈customer join is served by the join MV — branch
     // pruning differs between query and MV, so this row fails if the
     // branch-wise matcher regresses
     "q_mv_join" -> ((s, d) =>
-      mvServedJoin(s, d, t(s, d, "orders")
+      mvServed(s, d, "mv_oc_join", t(s, d, "orders")
         .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
         .groupBy("c_mktsegment")
         .agg(dsum(col("o_totalprice")).as("sum_price"),
-          count(lit(1)).as("cnt")))),
+          count(lit(1)).as("cnt")))(
+        t(s, d, "orders")
+          .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
+          .groupBy("c_mktsegment", "o_orderstatus")
+          .agg(sum(dec(col("o_totalprice"))).as("pp"), count(lit(1)).as("pc")))),
     // select-only MV (reference MVMatcher SelectSelectNoChildDelta):
     // a filtered projection is served by a filtered-projection MV, the
     // extra conjunct re-applied over the stored rows; fails if the
     // rewrite doesn't fire
     "q_mv_select" -> ((s, d) =>
-      mvServedSel(s, d, t(s, d, "lineitem")
+      mvServed(s, d, "mv_li_sel", t(s, d, "lineitem")
         .filter(col("l_quantity") > 40 && col("l_extendedprice") > 30000)
         .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_extendedprice")))),
+          col("l_extendedprice")))(
+        t(s, d, "lineitem")
+          .filter(col("l_quantity") > 40)
+          .select(col("l_orderkey"), col("l_linenumber"),
+            col("l_quantity"), col("l_extendedprice")))),
     // paged read (PaginationCarbonReader analog): committed order on the
     // orders3 fixture IS (o_orderdate, o_orderkey) order — loads arrived
     // in date-range order and each is GLOBAL_SORT — so page(1234, 200)
@@ -377,116 +386,36 @@ object EngineQueries {
     })
   )
 
-  /** Ensure the shared HOUR-grain timeseries MV over events exists and
-    * serves `query` (which buckets at a coarser granularity). */
-  private def mvServedTs(s: SparkSession, d: String, query: => DataFrame): DataFrame = lock.synchronized {
-    import graft.engine.mv.{Mv, MvCatalog}
-    val base = new java.io.File(d).getName
-    val mvPath = s"${Fixtures.root}/$base/mv_ev_ts"
-    def rewrites: Boolean = {
-      Mv.install(s)
-      query.queryExecution.optimizedPlan.toString.contains("mv_ev_ts")
-    }
-    val ready =
-      (MvCatalog.get("mv_ev_ts").isDefined || Mv.load(s, mvPath).isDefined) && rewrites
-    if (!ready) {
-      val mvq = t(s, d, "events")
-        .groupBy(graft.functions.GraftFunctions.timeseries(col("ts"), "hour").as("b"))
-        .agg(sum(dec(col("value"))).as("pv"), count(lit(1)).as("pc"))
-      Mv.drop(s, "mv_ev_ts")
-      Mv.create(s, "mv_ev_ts", mvq, mvPath)
-    }
-    val q = query
-    val plan = q.queryExecution.optimizedPlan.toString
-    require(plan.contains("mv_ev_ts"),
-      s"timeseries MV rewrite did not fire; plan:\n$plan")
-    q
-  }
+  /** The (l_returnflag, l_linestatus) rollup MV over lineitem that
+    * q_mv_rollup and q_mv_filter share. */
+  private def liRoll(s: SparkSession, d: String): DataFrame =
+    t(s, d, "lineitem")
+      .groupBy("l_returnflag", "l_linestatus")
+      .agg(sum(dec(col("l_quantity"))).as("pq"), count(lit(1)).as("pc"))
 
-  /** Ensure the shared orders⋈customer join MV exists and serves
-    * `query` (a coarser rollup over the same join — the reference's
-    * MVMatcher join subsumption). */
-  private def mvServedJoin(s: SparkSession, d: String, query: => DataFrame): DataFrame = lock.synchronized {
+  /** Ensure the shared MV `name`, built from `mvq`, exists and serves
+    * `query`; the row FAILS if the rewrite does not fire. Locked like
+    * every shared-fixture builder: two rows racing the drop+create would
+    * corrupt the MV under each other. */
+  private def mvServed(s: SparkSession, d: String, name: String, query: => DataFrame)(
+      mvq: => DataFrame): DataFrame = lock.synchronized {
     import graft.engine.mv.{Mv, MvCatalog}
-    val base = new java.io.File(d).getName
-    val mvPath = s"${Fixtures.root}/$base/mv_oc_join"
-    def rewrites: Boolean = {
-      Mv.install(s)
-      query.queryExecution.optimizedPlan.toString.contains("mv_oc_join")
-    }
-    val ready =
-      (MvCatalog.get("mv_oc_join").isDefined || Mv.load(s, mvPath).isDefined) && rewrites
-    if (!ready) {
-      val mvq = t(s, d, "orders")
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .groupBy("c_mktsegment", "o_orderstatus")
-        .agg(sum(dec(col("o_totalprice"))).as("pp"), count(lit(1)).as("pc"))
-      Mv.drop(s, "mv_oc_join")
-      Mv.create(s, "mv_oc_join", mvq, mvPath)
+    val mvPath = s"${Fixtures.root}/${new java.io.File(d).getName}/$name"
+    def rewrites: Boolean = query.queryExecution.optimizedPlan.toString.contains(name)
+    val registered = MvCatalog.get(name).isDefined
+    // the MV is a graft table: opening it brings the rewrite rule to a
+    // session that has touched no graft table yet (a bench client)
+    if (registered) GraftTable.at(s, mvPath)
+    // reuse a registered or persisted def (possibly from a previous JVM
+    // — the base parquet fixtures are immutable, so a loadable MV is
+    // fresh); any doubt (no def, plan drift) → rebuild from scratch
+    if (!((registered || Mv.load(s, mvPath).isDefined) && rewrites)) {
+      Mv.drop(s, name)
+      Mv.create(s, name, mvq, mvPath)
     }
     val q = query
     val plan = q.queryExecution.optimizedPlan.toString
-    require(plan.contains("mv_oc_join"),
-      s"join MV rewrite did not fire; plan:\n$plan")
-    q
-  }
-
-  /** Ensure the shared select-only (filtered projection) MV over
-    * lineitem exists and serves `query` (same filter + extra residual
-    * conjunct — reference MVMatcher SelectSelectNoChildDelta). */
-  private def mvServedSel(s: SparkSession, d: String, query: => DataFrame): DataFrame = lock.synchronized {
-    import graft.engine.mv.{Mv, MvCatalog}
-    val base = new java.io.File(d).getName
-    val mvPath = s"${Fixtures.root}/$base/mv_li_sel"
-    def rewrites: Boolean = {
-      Mv.install(s)
-      query.queryExecution.optimizedPlan.toString.contains("mv_li_sel")
-    }
-    val ready =
-      (MvCatalog.get("mv_li_sel").isDefined || Mv.load(s, mvPath).isDefined) && rewrites
-    if (!ready) {
-      val mvq = t(s, d, "lineitem")
-        .filter(col("l_quantity") > 40)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity"), col("l_extendedprice"))
-      Mv.drop(s, "mv_li_sel")
-      Mv.create(s, "mv_li_sel", mvq, mvPath)
-    }
-    val q = query
-    val plan = q.queryExecution.optimizedPlan.toString
-    require(plan.contains("mv_li_sel"),
-      s"select-only MV rewrite did not fire; plan:\n$plan")
-    q
-  }
-
-  /** Ensure the shared (l_returnflag, l_linestatus) MV over lineitem
-    * exists and serves `query`; requires the rewrite actually fired.
-    * Locked like every shared-fixture builder: two rows racing the
-    * drop+create would corrupt the MV under each other. */
-  private def mvServed(s: SparkSession, d: String, query: => DataFrame): DataFrame = lock.synchronized {
-    import graft.engine.mv.{Mv, MvCatalog}
-    val base = new java.io.File(d).getName
-    val mvPath = s"${Fixtures.root}/$base/mv_li_roll"
-    def rewrites: Boolean = {
-      Mv.install(s)
-      query.queryExecution.optimizedPlan.toString.contains("mv_li_roll")
-    }
-    // reuse a persisted def (possibly from a previous JVM — the base
-    // parquet fixture is immutable, so a loadable MV is fresh); any
-    // doubt (no def, plan drift) → rebuild from scratch
-    val ready =
-      (MvCatalog.get("mv_li_roll").isDefined || Mv.load(s, mvPath).isDefined) && rewrites
-    if (!ready) {
-      val mvq = t(s, d, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(sum(dec(col("l_quantity"))).as("pq"), count(lit(1)).as("pc"))
-      Mv.drop(s, "mv_li_roll")
-      Mv.create(s, "mv_li_roll", mvq, mvPath)
-    }
-    val q = query
-    val plan = q.queryExecution.optimizedPlan.toString
-    require(plan.contains("mv_li_roll"),
-      s"MV rewrite did not fire; plan:\n$plan")
+    require(plan.contains(name), s"MV $name rewrite did not fire; plan:\n$plan")
     q
   }
 

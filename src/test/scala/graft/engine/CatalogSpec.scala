@@ -1,6 +1,5 @@
 package graft.engine
 
-import graft.engine.catalog.GraftDml
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -16,7 +15,6 @@ class CatalogSpec extends AnyFunSuite {
     val w = Files.createTempDirectory("graft_wh_").toString
     spark.conf.set("spark.sql.catalog.graft", "graft.engine.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft.warehouse", w)
-    GraftDml.enable(spark)
     w
   }
 

@@ -99,7 +99,11 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val path = tmpTable()
     val t = GraftTable.create(spark, path, src.schema, Seq("o_orderkey"))
     t.insert(src.filter(col("o_orderkey") < 700))
+    // an empty insert commits a 0-row segment with no min/max; it has no
+    // value to contribute and must not turn the metadata answer off
+    t.insert(src.filter(lit(false)))
     t.insert(src.filter(col("o_orderkey") >= 700))
+    assert(t.status.visible.exists(_.rowCount == 0), "fixture needs a 0-row segment")
     // numeric min/max only: Spark's pushdown layer never offers string/
     // timestamp min/max to DSv2 sources, so those fall back to a scan
     val q = t.read.agg(
@@ -114,6 +118,20 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // an aggregate the stats can't answer (sum) must fall through to a scan
     val planSum = t.read.agg(sum(col("o_orderkey"))).queryExecution.executedPlan.toString
     assert(planSum.contains("Scan"), s"sum must scan:\n$planSum")
+  }
+
+  test("metadata min/max declines when a segment with rows has an all-null column") {
+    val src = spark.read.parquet(s"$sf/orders.parquet")
+      .select(col("o_orderkey"), col("o_totalprice"))
+    val t = GraftTable.create(spark, tmpTable(), src.schema, Seq("o_orderkey"))
+    t.insert(src.filter(col("o_orderkey") < 700))
+    t.insert(src.filter(col("o_orderkey") >= 700)
+      .withColumn("o_totalprice", lit(null).cast(src.schema("o_totalprice").dataType)))
+    val q = t.read.agg(max(col("o_totalprice")).as("max_p"))
+    val plan = q.queryExecution.executedPlan.toString
+    assert(plan.contains("BatchScan"), s"all-null segment must fall back to a scan:\n$plan")
+    assert(q.collect().head.get(0) ==
+      src.filter(col("o_orderkey") < 700).agg(max(col("o_totalprice"))).collect().head.get(0))
   }
 
   test("segment min/max pruning skips disjoint segments") {

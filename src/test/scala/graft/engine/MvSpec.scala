@@ -41,6 +41,21 @@ class MvSpec extends AnyFunSuite {
     } finally Mv.drop(spark, "mv_exact")
   }
 
+  test("a nested withoutRewrite keeps rewriting off for the enclosing block") {
+    import graft.engine.mv.MvRewriteRule
+    def q = lineitem.groupBy("l_returnflag", "l_linestatus").agg(count(lit(1)).as("cnt"))
+    Mv.create(spark, "mv_nest", q, s"${tmp()}/mv_nest")
+    def served = q.queryExecution.optimizedPlan.toString.contains("mv_nest")
+    try {
+      assert(served)
+      MvRewriteRule.withoutRewrite {
+        MvRewriteRule.withoutRewrite(())
+        assert(!served, "an inner call turned rewriting back on")
+      }
+      assert(served)
+    } finally Mv.drop(spark, "mv_nest")
+  }
+
   test("groupby-rollup rewrite: coarser grouping answered by finer MV") {
     val base = lineitem
     val mvq = base.groupBy("l_returnflag", "l_linestatus")

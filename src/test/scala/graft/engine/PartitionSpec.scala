@@ -246,7 +246,6 @@ class PartitionSpec extends AnyFunSuite {
 
   test("SQL UPDATE moving a partition value updates SHOW PARTITIONS") {
     val wh = Files.createTempDirectory("graft_pwh2_").toString
-    graft.engine.catalog.GraftDml.enable(spark)
     spark.conf.set("spark.sql.catalog.gpu", "graft.engine.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gpu.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gpu.ns")

@@ -1,6 +1,8 @@
 package graft.engine
 
 import graft.engine.index.{Si, SiRewriteRule}
+import graft.engine.source.CarbonishScan
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -27,7 +29,7 @@ class SiRewritePropsSpec extends AnyFunSuite {
     val t = GraftTable.create(spark, s"$root/t", src.schema, Seq("o_orderkey"))
     Seq("O", "F", "P").foreach(s0 =>
       t.insert(src.filter(col("o_orderstatus") === s0)))
-    Si.create(t, "o_orderstatus", s"$root/si") // installs the rule
+    Si.create(t, "o_orderstatus", s"$root/si")
 
     val status: Gen[String] = Gen.frequency(
       3 -> Gen.oneOf("O", "F", "P"),
@@ -61,10 +63,17 @@ class SiRewritePropsSpec extends AnyFunSuite {
       t.spark.experimental.extraOptimizations =
         rules.filterNot(_.isInstanceOf[SiRewriteRule])
       val plain =
-        try t.read.filter(p)
-          .agg(count(lit(1)), sum("o_orderkey"), sum("o_totalprice"))
-          .collect().head
-        finally t.spark.experimental.extraOptimizations = rules
+        try {
+          val q = t.read.filter(p)
+            .agg(count(lit(1)), sum("o_orderkey"), sum("o_totalprice"))
+          // the baseline must really be unrewritten: no table access may
+          // have put the rule back and pinned the scan to SI segments
+          val pinned = q.queryExecution.optimizedPlan.collect {
+            case r: DataSourceV2ScanRelation => r.scan
+          }.collect { case cs: CarbonishScan if cs.scanOptions.containsKey("segments") => cs }
+          assert(pinned.isEmpty, s"case $i baseline is SI-pinned on predicate $p")
+          q.collect().head
+        } finally t.spark.experimental.extraOptimizations = rules
       assert(rewritten == plain, s"case $i diverged on predicate $p")
     }
   }

@@ -1,6 +1,6 @@
 package graft.engine
 
-import graft.engine.index.{Si, SiSql}
+import graft.engine.index.Si
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,7 +19,7 @@ class SiSqlRewriteSpec extends AnyFunSuite {
     val t = GraftTable.create(spark, s"$root/t", src.schema, Seq("o_orderkey"))
     Seq("O", "F", "P").foreach(s0 =>
       t.insert(src.filter(col("o_orderstatus") === s0)))
-    Si.create(t, "o_orderstatus", s"$root/si") // installs the rule too
+    Si.create(t, "o_orderstatus", s"$root/si")
     (t, src)
   }
 
@@ -101,7 +101,6 @@ class SiSqlRewriteSpec extends AnyFunSuite {
     val (t, src) = fixture()
     val expected = src.filter(col("o_orderstatus") === "P").count()
     t.insert(src.filter(col("o_orderstatus") === "P").limit(10))
-    SiSql.enable(spark)
     assert(t.read.filter(col("o_orderstatus") === "P").count() == expected + 10,
       "rows in unindexed segments must not be dropped by the rewrite")
   }
